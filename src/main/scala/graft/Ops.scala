@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import graft.agg.{Factorize, GroupedMode}
 import graft.core.{IntervalSpec, PartitionSeries}
 import graft.intervals.{CombineIntervals, GroupIntervals}
-import graft.joins.{AsOfJoin, BinnedIntervalJoin, FindContainingInterval, InnerOrCrossJoin, IntervalJoin}
+import graft.joins.{AsOfJoin, FindContainingInterval, InnerOrCrossJoin, IntervalJoin}
 import graft.resample.{CustomAgg, MakeWindows, ResampleEav, ResampleInterval}
 import graft.windows.{Impute, PrevNextSpec, PrevNextValues}
 
@@ -165,7 +165,9 @@ object Ops {
       left: DataFrame, right: DataFrame,
       lStart: String, lStop: String, rStart: String, rStop: String,
       binWidth: Double): DataFrame =
-    BinnedIntervalJoin(left, right, lStart, lStop, rStart, rStop, binWidth)
+    IntervalJoin(left, right, IntervalSpec.closed(lStart, lStop),
+      IntervalSpec.closed(rStart, rStop), binWidth = Some(binWidth),
+      suffixes = (None, Some("_r")), keepOrder = false)
 
   def saltedJoin(
       big: DataFrame, small: DataFrame, on: Seq[String],

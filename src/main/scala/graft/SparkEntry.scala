@@ -8,7 +8,7 @@ import graft.agg.{Factorize, GroupedMode, Histogram, Winsorize}
 import graft.core.{IntervalSpec, Tables}
 import graft.dedup.{DuplicateClusters, ExactDedup, MinHashDedup, NgramJaccardDedup, SimHashDedup}
 import graft.intervals.{CombineIntervals, GroupIntervals}
-import graft.joins.{AsOfJoin, BinnedIntervalJoin, FindContainingInterval, IntervalJoin, SaltedJoin}
+import graft.joins.{AsOfJoin, FindContainingInterval, IntervalJoin, SaltedJoin}
 import graft.multimodal.Media
 import graft.resample.{MakeWindows, ResampleEav, ResampleInterval}
 import graft.similarity.{CosineTopK, EmbeddingDedup, IvfAnn, LshAnn, SemDedup}
@@ -103,8 +103,9 @@ object SparkEntry {
         .select(col("o_orderkey").as("rkey"),
           col("o_orderdate").as("rs"),
           (col("o_orderdate") + expr("INTERVAL 3 DAYS")).as("re"))
-      BinnedIntervalJoin(a, b, "ls", "le", "rs", "re",
-        binWidth = 2 * 86400.0)
+      IntervalJoin(a, b, IntervalSpec.closed("ls", "le"),
+        IntervalSpec.closed("rs", "re"), binWidth = Some(2 * 86400.0),
+        suffixes = (None, Some("_r")), keepOrder = false)
         .select(col("lkey"), col("rkey"))
     }
 
@@ -3580,9 +3581,11 @@ object SparkEntry {
 
   /** The salted sweep on a deliberately skewed shape: one key holds
     * half of BOTH sides (the mega-entity), the rest spread over ~1000
-    * keys; the hot key is time-sliced 8 ways so its sweep runs on 8
-    * tasks instead of 1 (keep=first bounds output to one row per
-    * matched left row at every scale). Oracle: plain range join +
+    * keys; the stats pass finds the hot key and time-slices it from the
+    * LEFT (keep=first is per-left-row, so the left is always the sliced
+    * side — q_auto_sweep covers right-side slicing), so its sweep runs
+    * on several tasks instead of 1 (keep=first bounds output to one row
+    * per matched left row at every scale). Oracle: plain range join +
     * min-by — the slicing must be invisible in the result. */
   private val q_salted_sweep: (SparkSession, String) => DataFrame =
     (s, dir) => {
@@ -3595,10 +3598,9 @@ object SparkEntry {
       val r = t(s, dir, "orders").select(
         col("o_orderkey").as("rid"), skew(col("o_orderkey")).as("grp_r"),
         ((col("o_orderkey") * 31 % 100000).cast("double") / 10.0).as("p"))
-      graft.joins.SaltedSweepJoin(l, r, Seq("grp"), Seq("grp_r"),
+      graft.joins.SaltedSweepJoin.auto(l, r, Seq("grp"), Seq("grp_r"),
         IntervalSpec.closed("s", "e"), IntervalSpec.point("p"),
-        slices = 8, hotKeyThreshold = 300,
-        keep = "first", rightOrderCol = Some("rid"))
+        keep = "first", rightOrderCol = Some("rid"), targetRowsPerTask = 300)
         .select(col("okey"), col("rid"))
     }
 
@@ -3609,10 +3611,10 @@ object SparkEntry {
     * mega-key is lineitem-heavy (4 line items per order: the right
     * side carries ~4× the hot rows). `targetRowsPerTask` is pinned to
     * test-scale task sizing only because sf0.01 is far below the
-    * production floor (`minHotRows` = 64 Ki rows/key) — the derivation
-    * itself (2 · total/parallelism) is what `graft.SkewProbe`
-    * exercises at probe scale. Shares the plain range-join oracle:
-    * salting must be row-invisible. */
+    * production floor (`minHotRows` = 64 Ki rows/key); the derivation
+    * itself (2 · total/parallelism) is measured at probe scale in
+    * SCALING.md. Shares the plain range-join oracle: salting must be
+    * row-invisible. */
   private val q_auto_sweep: (SparkSession, String) => DataFrame =
     (s, dir) => {
       val skew = (k: Column) => when(k % 2 === 0, 0L).otherwise(k % 997)
@@ -3647,12 +3649,9 @@ object SparkEntry {
     (s0, dir) => {
       val s = s0.newSession()
       s.experimental.extraOptimizations = Seq(graft.plans.SweepJoinRewrite)
-      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .experimental.extraStrategies =
-          Seq(org.apache.spark.sql.graft.IntervalSweepStrategy)
+      org.apache.spark.sql.graft.IntervalSweepStrategy.setup(s)
       s.conf.set(graft.plans.SweepJoinRewrite.enabledKey, "true")
-      // test-scale task sizing only (production floor is 64Ki rows/key);
-      // the derivation itself is what graft.SkewProbe exercises at scale
+      // test-scale task sizing only (production floor is 64Ki rows/key)
       s.conf.set("spark.graft.skew.targetRowsPerTask", "300")
       val skew = (k: Column) => when(k % 2 === 0, 0L).otherwise(k % 997)
       val l = t(s, dir, "orders").select(
@@ -4117,9 +4116,7 @@ object SparkEntry {
     (s0, dir) => {
       val s = s0.newSession()
       s.experimental.extraOptimizations = Seq(graft.plans.SweepJoinRewrite)
-      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .experimental.extraStrategies =
-          Seq(org.apache.spark.sql.graft.IntervalSweepStrategy)
+      org.apache.spark.sql.graft.IntervalSweepStrategy.setup(s)
       s.conf.set(graft.plans.SweepJoinRewrite.enabledKey, "true")
       val o = t(s, dir, "orders")
       val l = o.filter(col("o_orderkey") % 20 === 0).select(

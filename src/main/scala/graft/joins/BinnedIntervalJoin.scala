@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
 
-/** Binned (bucketed) interval-overlap join — the scale path for interval
-  * joins WITHOUT equality keys (SURVEY.md §4: the reference decomposes
+/** Bin helpers of [[IntervalJoin]]'s binned path (`binWidth` /
+  * `autoBinWidth`) — the scale path for interval joins WITHOUT equality
+  * keys, or with coarse ones (SURVEY.md §4: the reference decomposes
   * keyless overlap into two sorted containment sweeps,
   * `merging.py:437-496`; the Spark-native equivalent of that rewrite is
   * bin bucketing, the same idea as Databricks' range-join binning).
@@ -16,11 +17,12 @@ import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
   * the join runs on the bin id (hash-partitionable, AQE-skew-splittable),
   * and each overlapping pair is counted exactly once by keeping only the
   * bin that contains the overlap's start point (`greatest(l.start,
-  * r.start)`) — a pure DataFrame-level rewrite, no custom strategy.
+  * r.start)`).
   *
   * Cost: |rows| × (interval length / binWidth) exploded rows; pick
   * `binWidth` near the typical interval length so most intervals touch
-  * 1-2 bins. Both sides must be bounded (finite endpoints).
+  * 1-2 bins ([[autoWidth]] derives it). Both sides must be bounded
+  * (finite endpoints).
   */
 object BinnedIntervalJoin {
 
@@ -92,74 +94,6 @@ object BinnedIntervalJoin {
       val span = math.max(lSpan, rSpan)
       if (span > 0) span / 4096.0 else 1.0
     }
-  }
-
-  /** `binWidth` in the endpoint's natural units: seconds for
-    * timestamp/date columns, the raw value for numerics.
-    *
-    * @param left    bounded intervals `[lStart, lStop]` (closed)
-    * @param right   bounded intervals `[rStart, rStop]` (closed)
-    * @param on      equality-key columns present in BOTH inputs; the join
-    *                then runs on (keys, bin) — even WITH keys this beats
-    *                the plain equi-join + range-post-filter plan whenever
-    *                keys are coarse (the post-filter degenerates to a
-    *                per-key cartesian: 10k groups × 1k×100 rows = 1e9
-    *                pair evaluations, vs ~|output| after binning)
-    * @return matched pairs with all columns of both inputs (right columns
-    *         suffixed `_r` when names collide)
-    */
-  def apply(
-      left: DataFrame,
-      right: DataFrame,
-      lStart: String, lStop: String,
-      rStart: String, rStop: String,
-      binWidth: Double,
-      on: Seq[String] = Nil): DataFrame = {
-    require(binWidth > 0, "binWidth must be positive")
-    val dt = left.schema(lStart).dataType
-    val width = widthFor(dt, binWidth)
-
-    val overlap = left.columns.toSet.intersect(right.columns.toSet)
-    val rRenamed = overlap.foldLeft(right)((d, c) => d.withColumnRenamed(c, c + "_r"))
-    def rName(c: String): String = if (overlap(c)) c + "_r" else c
-
-    // NaN endpoints: `NaN <= NaN` is true in Spark, so without an explicit
-    // guard a [NaN, NaN] interval would pass the validity filter, bin to
-    // floor(NaN) = 0 and spuriously match other NaN intervals. The
-    // reference treats any-NaN intervals as empty (merging.py:138-139) —
-    // mirror Intervals.nonEmpty's notNaNNotNull here.
-    def validIv(d: DataFrame, a: String, b: String): Column = {
-      def ok(c: String): Column = d.schema(c).dataType match {
-        case org.apache.spark.sql.types.DoubleType |
-             org.apache.spark.sql.types.FloatType =>
-          col(c).isNotNull && !isnan(col(c))
-        case _ => col(c).isNotNull
-      }
-      ok(a) && ok(b) && col(a) <= col(b)
-    }
-    val lValid = left.filter(validIv(left, lStart, lStop))
-    val rValid = rRenamed.filter(validIv(rRenamed, rName(rStart), rName(rStop)))
-
-    val lBinned = lValid.withColumn("__graft_bin",
-      explode(sequence(binOf(col(lStart), dt, width), binOf(col(lStop), dt, width))))
-    val rBinned = rValid.withColumn("__graft_rbin",
-      explode(sequence(binOf(col(rName(rStart)), dt, width),
-        binOf(col(rName(rStop)), dt, width))))
-
-    // equi-join on (keys, bin); true overlap check; count each pair
-    // exactly once — in the bin holding the overlap's start point
-    val anchor = binOf(greatest(col(lStart), col(rName(rStart))), dt, width)
-    // <=> (null-safe), matching keyed IntervalJoin: rows with null keys
-    // match each other there, so they must here too (the bin-explosion
-    // equi-conjuncts are never null — endpoints are validity-filtered)
-    val keyConds = on.map(k => col(k) <=> col(rName(k)))
-    lBinned.join(rBinned,
-        (keyConds :+
-          (col("__graft_bin") === col("__graft_rbin")) :+
-          (col(lStart) <= col(rName(rStop))) :+
-          (col(rName(rStart)) <= col(lStop)) :+
-          (col("__graft_bin") === anchor)).reduce(_ && _))
-      .drop("__graft_bin", "__graft_rbin")
   }
 }
 

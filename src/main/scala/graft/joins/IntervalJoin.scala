@@ -24,8 +24,12 @@ import org.apache.spark.sql.functions._
   * `min_by`/`max_by` hash aggregation for `keep` (map-side partials, no
   * sort). With equality keys Catalyst plans a shuffled hash / sort-merge
   * join with the range conjuncts as post-filter; small sides should be
-  * broadcast by AQE. Keyless joins fall back to BNLJ — see
-  * [[BinnedIntervalJoin]] for the scale path.
+  * broadcast by AQE. Keyed inner joins with bounded endpoints whose
+  * sides are both too large to broadcast (always, when
+  * `spark.sql.autoBroadcastJoinThreshold` is below 0) run through the
+  * sweep SparkPlan instead ([[SweepJoin]]: one shuffle + one sort per
+  * side, partition-local sweep, no candidate blowup). Keyless joins fall
+  * back to BNLJ — pass `binWidth` or `autoBinWidth` for the scale path.
   *
   * Row order: Spark DataFrames are unordered; when `keepOrder = true` the
   * result is sorted by (primary row id, secondary row id), reproducing the
@@ -87,19 +91,6 @@ object IntervalJoin {
     *                   sides, [[BinnedIntervalJoin.autoWidth]]) — the
     *                   no-knob spelling of `binWidth`; mutually
     *                   exclusive with it
-    * @param sweep      route the matching phase through the custom
-    *                   sweep SparkPlan
-    *                   ([[org.apache.spark.sql.graft.IntervalSweepJoinExec]]:
-    *                   one shuffle + one sort per side, partition-local
-    *                   sweep, no candidate blowup). `None` (default) =
-    *                   automatic: used for keyed inner joins with
-    *                   bounded endpoints when NEITHER side is small
-    *                   enough to broadcast (if one is, Catalyst's
-    *                   broadcast hash join avoids shuffling the big
-    *                   side at all — better than any shuffled plan) and
-    *                   no explicit binWidth was requested.
-    *                   `Some(true)` forces it (throws if the shape is
-    *                   ineligible); `Some(false)` disables.
     * @param skewGuard  when the sweep path engages, route it through
     *                   [[SaltedSweepJoin.auto]]: one both-sides stats
     *                   pass detects hot equality keys (threshold derived
@@ -129,7 +120,6 @@ object IntervalJoin {
       nullSafeKeys: Boolean = true,
       binWidth: Option[Double] = None,
       autoBinWidth: Boolean = false,
-      sweep: Option[Boolean] = None,
       skewGuard: Boolean = false): DataFrame = {
 
     require(Seq("inner", "left", "right", "outer").contains(how), s"how=$how")
@@ -226,7 +216,7 @@ object IntervalJoin {
     // ── sweep routing (custom SparkPlan) ────────────────────────────────
     // Eligible shape: keyed inner join, bounded endpoints on both sides,
     // a genuine range (not the two-point equality fast path), batch
-    // frames, no explicit binning. Auto mode additionally requires that
+    // frames, no explicit binning. The route additionally requires that
     // neither side is broadcast-small under the session threshold —
     // when one is, Catalyst's BHJ (no shuffle of the big side) beats
     // any shuffled plan, sweep included.
@@ -235,26 +225,19 @@ object IntervalJoin {
     // check reads `optimizedPlan.stats.sizeInBytes`, which (a) costs one
     // extra driver-side analyze+optimize pass per call, and (b) is an
     // ESTIMATE — post-filter sizes in particular are guessed from filter
-    // selectivity heuristics. An under-estimate makes auto mode skip the
+    // selectivity heuristics. An under-estimate makes the route skip the
     // sweep for a side that AQE would NOT actually broadcast (mild: the
     // plain join still runs, possibly slower); an over-estimate picks
     // the shuffle-sweep where a broadcast join was available (mild for
-    // the same reason in reverse). Callers who know their sizes should
-    // pin the decision with `sweep = Some(true/false)` — the estimate
-    // only steers the DEFAULT.
-    val sweepEligible =
+    // the same reason in reverse). Callers who know their sizes pin the
+    // decision through the session's broadcast threshold: below 0 forces
+    // the sweep, a value above both sides' sizes the plain join.
+    val useSweep =
       how == "inner" && effBinWidth.isEmpty && lKeys.nonEmpty &&
         leftSpec.start.isDefined && leftSpec.stop.isDefined &&
         rightSpec.start.isDefined && rightSpec.stop.isDefined &&
         !(leftSpec.isPoint && rightSpec.isPoint) &&
-        !left.isStreaming && !right.isStreaming
-    require(!sweep.contains(true) || sweepEligible,
-      "sweep = Some(true) requires a keyed INNER join of batch frames " +
-        "with bounded endpoints (and not the two-point equality shape)")
-    val useSweep = sweep match {
-      case Some(b) => b && sweepEligible
-      case None =>
-        sweepEligible && {
+        !left.isStreaming && !right.isStreaming && {
           val confVal = left.sparkSession.conf
             .get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
           // threshold < 0 disables broadcasting: Catalyst must shuffle
@@ -268,14 +251,13 @@ object IntervalJoin {
             lSize.min(rSize) > BigInt(thresh)
           }
         }
-    }
 
     // keep=first/last/both on the sweep path is decided INSIDE the sweep
     // (extremes by right row id per left row): output shrinks from the
     // full pair set to ≤ 2·|left| and the min_by/max_by aggregation
     // below — a full-output shuffle — disappears. Only valid when the
-    // primary side is the left (how = inner ⊆ sweepEligible).
-    val sweepKeep = useSweep && keep != "all" && effBinWidth.isEmpty
+    // primary side is the left (the sweep route is inner-only).
+    val sweepKeep = useSweep && keep != "all"
     val joined = effBinWidth match {
       case None if useSweep && skewGuard =>
         SaltedSweepJoin.auto(lValid, rJoinSide,

@@ -16,12 +16,12 @@ import graft.core.IntervalSpec
   * parallelism by TIME-SLICING hot keys, which the interval predicate
   * makes cheaper than classic s-way salting:
   *
-  *   - per hot key (left row count > `hotKeyThreshold`, found by one
-  *     count-only aggregation), the LEFT start domain `[mn, mx]` is cut
-  *     into `slices` uniform ranges; every left row goes to exactly ONE
-  *     slice by its start — so output multiplicity and `keep`
-  *     first/last/both semantics are untouched (all of a left row's
-  *     matches meet it in its slice);
+  *   - per hot key (row count above the threshold [[auto]] derives in
+  *     one stats aggregation), the LEFT start domain `[mn, mx]` is cut
+  *     into `slices` uniform ranges (right-side skew swaps the operands
+  *     first); every left row goes to exactly ONE slice by its start —
+  *     so output multiplicity and `keep` first/last/both semantics are
+  *     untouched (all of a left row's matches meet it in its slice);
   *   - a RIGHT row `[rs, re]` is replicated only to the slices it can
   *     reach: slice `i` holds left rows with `ls ∈ [b_i, b_{i+1})`, so
   *     a match needs `re ≥ ls ≥ b_i` and `rs ≤ le ≤ ls + D < b_{i+1} +
@@ -48,61 +48,19 @@ import graft.core.IntervalSpec
   *
   * [[auto]] is the no-knob entry point: one stats pass over BOTH sides
   * derives the hot threshold from the data and the session parallelism,
-  * picks the slicing SIDE (the footgun the manual API documents as
-  * "swap sides" — a right-side-heavy key wants the roles reversed,
-  * which interval-overlap symmetry allows for `keep = all`), and picks
-  * the slice count from the hottest key. A plain optimizer rule cannot
-  * own this decision — Catalyst rules must not launch jobs, and the
-  * sweep's custom exec is outside AQE's skew-join scope — so the
-  * runtime-stats dispatch lives here, at the operator API, the same
+  * picks the slicing SIDE (a right-side-heavy key wants the roles
+  * reversed, which interval-overlap symmetry allows for `keep = all`),
+  * and picks the slice count from the hottest key. A plain optimizer
+  * rule cannot own this decision — Catalyst rules must not launch jobs,
+  * and the sweep's custom exec is outside AQE's skew-join scope — so
+  * the runtime-stats dispatch lives here, at the operator API, the same
   * division of labor as Spark's own broadcast-threshold-vs-AQE split.
   */
 object SaltedSweepJoin {
 
-  /** @param slices          time slices per hot key (the parallelism a
-    *                        hot key's sweep recovers)
-    * @param hotKeyThreshold left rows per key above which the key is
-    *                        sliced; pick ~rows-per-healthy-task (or use
-    *                        [[auto]], which derives it)
-    * @param maxHotKeys      refuse (loudly) if more keys than this are
-    *                        hot — that is not skew, that is a
-    *                        mis-sized threshold
-    */
-  def apply(left: DataFrame, right: DataFrame,
-            leftOn: Seq[String], rightOn: Seq[String],
-            leftSpec: IntervalSpec, rightSpec: IntervalSpec,
-            slices: Int = 8,
-            hotKeyThreshold: Long = 2000000L,
-            maxHotKeys: Int = 10000,
-            keep: String = "all",
-            rightOrderCol: Option[String] = None,
-            nullSafeKeys: Boolean = false): DataFrame = {
-    checkArgs(leftOn, rightOn, leftSpec, rightSpec, slices)
-
-    val lValid = left.filter(graft.core.Intervals.nonEmpty(left, leftSpec))
-
-    // ── one count-only stats pass over the left side ──────────────────
-    val hot = sideStats(lValid, left, leftOn, leftSpec)
-      .filter(col("__ss_n") > hotKeyThreshold)
-      .drop("__ss_n")
-    val nHot = hot.limit(maxHotKeys + 1).count()
-    require(nHot <= maxHotKeys,
-      s"more than $maxHotKeys keys exceed hotKeyThreshold=$hotKeyThreshold " +
-        "left rows; raise the threshold — slicing every key is just a " +
-        "more expensive shuffle")
-    if (nHot == 0) {
-      // nothing hot: identical plan to the plain sweep, zero overhead
-      return SweepJoin(left, right, leftOn, rightOn, leftSpec, rightSpec,
-        nullSafeKeys = nullSafeKeys, keep = keep,
-        rightOrderCol = rightOrderCol)
-    }
-    salted(left, right, leftOn, rightOn, leftSpec, rightSpec, hot, slices,
-      keep, rightOrderCol, nullSafeKeys)
-  }
-
   /** Stats-driven sweep with automatic skew routing — the connection of
-    * `Profile.keySkew`-style detection to the salted sweep the manual
-    * API leaves to the caller. No tuning surface:
+    * `Profile.keySkew`-style detection to the salted sweep. No tuning
+    * surface:
     *
     *   - ONE map-side-combined aggregation over the union of both
     *     (validity-filtered) sides computes per-key row counts and
@@ -181,7 +139,14 @@ object SaltedSweepJoin {
            slicesCap: Int = 32,
            maxHotKeys: Int = 10000,
            nullSafeKeys: Boolean = false): Option[DataFrame] = {
-    checkArgs(leftOn, rightOn, leftSpec, rightSpec, slices = 2)
+    require(slicesCap >= 2, "slicesCap >= 2 (1 would be the plain sweep)")
+    require(leftOn.nonEmpty, "salting needs equality keys")
+    require(leftOn.length == rightOn.length,
+      s"key lists must align: $leftOn vs $rightOn")
+    require(leftSpec.start.isDefined && leftSpec.stop.isDefined &&
+      rightSpec.start.isDefined && rightSpec.stop.isDefined,
+      "SaltedSweepJoin needs bounded intervals on both sides, like the " +
+        "sweep it wraps (use IntervalJoin for one-sided/±∞ specs)")
     require(left.columns.map(_.toLowerCase).toSet
         .intersect(right.columns.map(_.toLowerCase).toSet).isEmpty,
       "auto needs disjoint column names across sides (the sweep requires " +
@@ -286,19 +251,6 @@ object SaltedSweepJoin {
     }
   }
 
-  private def checkArgs(leftOn: Seq[String], rightOn: Seq[String],
-                        leftSpec: IntervalSpec, rightSpec: IntervalSpec,
-                        slices: Int): Unit = {
-    require(slices >= 2, "slices >= 2 (1 would be the plain sweep)")
-    require(leftOn.nonEmpty, "salting needs equality keys")
-    require(leftOn.length == rightOn.length,
-      s"key lists must align: $leftOn vs $rightOn")
-    require(leftSpec.start.isDefined && leftSpec.stop.isDefined &&
-      rightSpec.start.isDefined && rightSpec.stop.isDefined,
-      "SaltedSweepJoin needs bounded intervals on both sides, like the " +
-        "sweep it wraps (use IntervalJoin for one-sided/±∞ specs)")
-  }
-
   // endpoint → double metric for slice arithmetic only (the join
   // itself compares the ORIGINAL columns; rounding here only shifts
   // slice boundaries, which the ±1 widening absorbs)
@@ -313,19 +265,6 @@ object SaltedSweepJoin {
     * strict comparisons exclude all three). */
   private def finite(c: Column): Column =
     c > lit(Double.NegativeInfinity) && c < lit(Double.PositiveInfinity)
-
-  /** Per-key `(count, min start, max start, max duration)` of one side,
-    * with non-finite-stats keys dropped (left unsliced — see scaladoc). */
-  private def sideStats(valid: DataFrame, orig: DataFrame, on: Seq[String],
-                        spec: IntervalSpec): DataFrame =
-    valid.groupBy(on.map(col): _*)
-      .agg(count(lit(1)).as("__ss_n"),
-        min(metric(orig, spec.start.get)).as("__ss_mn"),
-        max(metric(orig, spec.start.get)).as("__ss_mx"),
-        max(metric(orig, spec.stop.get) - metric(orig, spec.start.get))
-          .as("__ss_d"))
-      .filter(finite(col("__ss_mn")) && finite(col("__ss_mx")) &&
-        finite(col("__ss_d")))
 
   /** The slicing core: `hot` is keyed by `leftOn` with finite
     * `__ss_mn/__ss_mx/__ss_d` stats of the LEFT side (callers that

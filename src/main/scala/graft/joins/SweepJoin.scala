@@ -11,16 +11,25 @@ import graft.core.IntervalSpec
   * contract).
   *
   * When to prefer which interval-join path:
-  *   - [[IntervalJoin]] (optionally binned): the general surface — every
-  *     how × keep combination, indexers, suffixes, outer joins.
-  *   - [[graft.plans.BinnedJoinRewrite]]: users writing plain declarative
-  *     range joins, rewritten in the optimizer.
+  *   - [[IntervalJoin]]: the general surface — every how × keep
+  *     combination, indexers, suffixes, outer joins. It picks this sweep
+  *     itself for keyed inner joins whose sides are too large to
+  *     broadcast (or whenever `spark.sql.autoBroadcastJoinThreshold` is
+  *     below 0), and bins keyless or coarse-keyed joins when given
+  *     `binWidth` / `autoBinWidth`.
+  *   - [[SaltedSweepJoin.auto]]: this sweep with hot equality keys
+  *     time-sliced across tasks (`IntervalJoin(skewGuard = true)` routes
+  *     its sweep there).
+  *   - [[graft.plans.BinnedJoinRewrite]] / [[graft.plans.SweepJoinRewrite]]:
+  *     users writing plain declarative range joins, rewritten in the
+  *     optimizer.
   *   - this sweep: inner overlap/containment at maximum throughput — one
   *     shuffle + one sort per side, no bin-width knob, no candidate
   *     explosion on dense same-key ranges. Output multiplicity is the
   *     full pair set (`how = inner, keep = both`).
   *
-  * The planner strategy is installed on the session on first use (idempotent).
+  * The planner strategy is installed on the session on first use
+  * ([[org.apache.spark.sql.graft.IntervalSweepStrategy.setup]]).
   */
 object SweepJoin {
 
@@ -65,10 +74,7 @@ object SweepJoin {
     val rValid = right.filter(graft.core.Intervals.nonEmpty(right, rightSpec))
     val spark = left.sparkSession
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!spark.experimental.extraStrategies.contains(IntervalSweepStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ IntervalSweepStrategy
-    }
+    IntervalSweepStrategy.setup(spark)
     val lPlan = lValid.queryExecution.analyzed
     val rPlan = rValid.queryExecution.analyzed
     val resolver = spark.sessionState.analyzer.resolver

@@ -18,7 +18,7 @@ import org.apache.spark.sql.{graft => graft_sweep}
   * With the rule active, a plain `left.join(right, rangeCond)` — which
   * Spark plans as a cartesian product / broadcast nested-loop join,
   * O(|L|·|R|) — is rewritten to the binned interval equi-join (the same
-  * rewrite [[graft.joins.BinnedIntervalJoin]] applies explicitly, measured
+  * rewrite `IntervalJoin(binWidth = ...)` applies explicitly, measured
   * 77 s → ~4.5 s on the reference's published 10M×1M workload). Users keep
   * writing declarative joins; the optimizer owns the physical strategy.
   *

@@ -65,11 +65,20 @@ object SweepPlanBuilder {
     org.apache.spark.sql.classic.Dataset.ofRows(spark, plan)
 }
 
-/** Plans [[IntervalSweepJoin]] as [[IntervalSweepJoinExec]]. Install via
-  * `spark.experimental.extraStrategies` (the public API wrapper does) or
-  * `GraftExtensions`.
+/** Plans [[IntervalSweepJoin]] as [[IntervalSweepJoinExec]]. Install on
+  * a live session with [[setup]] (the public API wrapper does), or at
+  * session build time with `GraftExtensions`.
   */
 object IntervalSweepStrategy extends SparkStrategy {
+  /** Adds this strategy to the session's extra strategies unless it is
+    * already there; safe to call on every use. */
+  def setup(session: org.apache.spark.sql.SparkSession): Unit = {
+    val experimental = session
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    if (!experimental.extraStrategies.contains(this))
+      experimental.extraStrategies = experimental.extraStrategies :+ this
+  }
+
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: IntervalSweepJoin =>
       IntervalSweepJoinExec(planLater(j.left), planLater(j.right),

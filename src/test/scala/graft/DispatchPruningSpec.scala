@@ -6,9 +6,7 @@ class DispatchPruningSpec extends SparkSuite {
     import org.apache.spark.sql.graft.AutoSaltedSweepJoin
     val s = spark.newSession()
     s.experimental.extraOptimizations = Seq(graft.plans.SweepJoinRewrite)
-    s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .experimental.extraStrategies =
-        Seq(org.apache.spark.sql.graft.IntervalSweepStrategy)
+    org.apache.spark.sql.graft.IntervalSweepStrategy.setup(s)
     s.conf.set(graft.plans.SweepJoinRewrite.enabledKey, "true")
     s.conf.set("spark.graft.skew.targetRowsPerTask", "300")
     val dir = "/root/testdata/sf0.01"

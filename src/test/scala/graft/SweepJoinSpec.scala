@@ -11,6 +11,14 @@ import org.apache.spark.sql.functions._
 class SweepJoinSpec extends SparkSuite {
   import spark.implicits._
 
+  /** Runs `body` with the session's broadcast threshold at `v`: "-1"
+    * sends IntervalJoin's eligible shapes through the sweep, "1g" keeps
+    * these small test sides on the plain join. */
+  private def withBroadcastThreshold[A](v: String)(body: => A): A = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+    try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
   private def ivals = Seq(
     // (grp, id, s, e)
     (1L, 10L, 0.0, 5.0),
@@ -162,38 +170,43 @@ class SweepJoinSpec extends SparkSuite {
       nullSafe <- Seq(true, false)
       (incS, incE) <- Seq((true, true), (true, false), (false, true))
     } {
-      def run(sw: Boolean) = IntervalJoin(l, r,
-        IntervalSpec(Some("s"), Some("e"), incS, incE),
-        IntervalSpec.closed("rs", "re"),
-        leftOn = Seq("g"), rightOn = Seq("g"),
-        keep = keep, keepOrder = false, nullSafeKeys = nullSafe,
-        sweep = Some(sw))
-        .collect().map(_.toSeq.map(Option(_))).toSet
+      def run(sw: Boolean) = withBroadcastThreshold(if (sw) "-1" else "1g") {
+        val df = IntervalJoin(l, r,
+          IntervalSpec(Some("s"), Some("e"), incS, incE),
+          IntervalSpec.closed("rs", "re"),
+          leftOn = Seq("g"), rightOn = Seq("g"),
+          keep = keep, keepOrder = false, nullSafeKeys = nullSafe)
+        assert(df.queryExecution.executedPlan.toString
+          .contains("IntervalSweepJoin") == sw, s"sweep=$sw")
+        df.collect().map(_.toSeq.map(Option(_))).toSet
+      }
       assert(run(true) == run(false),
         s"keep=$keep nullSafe=$nullSafe inc=($incS,$incE)")
     }
   }
 
-  test("IntervalJoin sweep routing: forced on ineligible shape throws; auto skips small sides") {
+  test("sweep routing: small sides skip it, threshold -1 forces it") {
     import graft.joins.IntervalJoin
     val l = Seq((1L, 0.0, 5.0)).toDF("g", "s", "e")
     val r = Seq((1L, 1.0, 2.0)).toDF("g", "rs", "re")
-    intercept[IllegalArgumentException] {
-      IntervalJoin(l, r, IntervalSpec.closed("s", "e"),
-        IntervalSpec.closed("rs", "re"), leftOn = Seq("g"), rightOn = Seq("g"),
-        how = "left", sweep = Some(true))
-    }
-    // auto mode on broadcast-small sides: plain join plan (no sweep node)
+    // broadcast-small sides under the default threshold: plain join plan
     val auto = IntervalJoin(l, r, IntervalSpec.closed("s", "e"),
       IntervalSpec.closed("rs", "re"), leftOn = Seq("g"), rightOn = Seq("g"),
       keepOrder = false)
     assert(!auto.queryExecution.executedPlan.toString.contains("IntervalSweepJoin"))
-    // forced: the sweep node appears and the result is identical
-    val forced = IntervalJoin(l, r, IntervalSpec.closed("s", "e"),
-      IntervalSpec.closed("rs", "re"), leftOn = Seq("g"), rightOn = Seq("g"),
-      keepOrder = false, sweep = Some(true))
-    assert(forced.queryExecution.executedPlan.toString.contains("IntervalSweepJoin"))
-    assert(forced.collect().toSeq.map(_.toSeq) == auto.collect().toSeq.map(_.toSeq))
+    // broadcasting off: the sweep node appears and the result is identical
+    withBroadcastThreshold("-1") {
+      val forced = IntervalJoin(l, r, IntervalSpec.closed("s", "e"),
+        IntervalSpec.closed("rs", "re"), leftOn = Seq("g"), rightOn = Seq("g"),
+        keepOrder = false)
+      assert(forced.queryExecution.executedPlan.toString.contains("IntervalSweepJoin"))
+      assert(forced.collect().toSeq.map(_.toSeq) == auto.collect().toSeq.map(_.toSeq))
+      // ineligible shapes keep the plain join whatever the threshold
+      val left = IntervalJoin(l, r, IntervalSpec.closed("s", "e"),
+        IntervalSpec.closed("rs", "re"), leftOn = Seq("g"), rightOn = Seq("g"),
+        how = "left", keepOrder = false)
+      assert(!left.queryExecution.executedPlan.toString.contains("IntervalSweepJoin"))
+    }
   }
 
   test("auto routing: BHJ when a side is broadcast-small, sweep when neither is") {
@@ -259,18 +272,24 @@ class SweepJoinSpec extends SparkSuite {
       .toDF("g", "s", "e")
     val r = (0 until 500).map(i => (i % 5L, i.toDouble % 40, i % 40 + 3.0))
       .toDF("g", "rs", "re")
-    val df = IntervalJoin(l, r, IntervalSpec.closed("s", "e"),
+    def run() = IntervalJoin(l, r, IntervalSpec.closed("s", "e"),
       IntervalSpec.closed("rs", "re"), leftOn = Seq("g"), rightOn = Seq("g"),
-      keep = "first", keepOrder = false, sweep = Some(true))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("IntervalSweepJoin"), plan)
-    assert(!plan.contains("HashAggregate"),
-      s"keep should be fused into the sweep, not aggregated after:\n$plan")
+      keep = "first", keepOrder = false)
+    val fused = withBroadcastThreshold("-1") {
+      val df = run()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("IntervalSweepJoin"), plan)
+      assert(!plan.contains("HashAggregate"),
+        s"keep should be fused into the sweep, not aggregated after:\n$plan")
+      df.collect().map(_.toSeq).toSet
+    }
     // and the fused result still matches the aggregation path
-    val agg = IntervalJoin(l, r, IntervalSpec.closed("s", "e"),
-      IntervalSpec.closed("rs", "re"), leftOn = Seq("g"), rightOn = Seq("g"),
-      keep = "first", keepOrder = false, sweep = Some(false))
-    assert(df.collect().map(_.toSeq).toSet == agg.collect().map(_.toSeq).toSet)
+    val agg = withBroadcastThreshold("1g") {
+      val df = run()
+      assert(!df.queryExecution.executedPlan.toString.contains("IntervalSweepJoin"))
+      df.collect().map(_.toSeq).toSet
+    }
+    assert(fused == agg)
   }
 
   test("salted sweep: hot key sliced across >1 slice, results ≡ plain sweep") {
@@ -293,12 +312,15 @@ class SweepJoinSpec extends SparkSuite {
     val plain = SweepJoin(l, r, Seq("grp"), Seq("g2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.closed("rs", "re"))
       .select("lid", "rid").as[(Long, Long)].collect().toSet
+    // key 0 holds 1000 rows a side: at 100 rows per task it wants 10
+    // slices, so the cap sets the slice count
     for (slices <- Seq(2, 8)) {
-      val salted = SaltedSweepJoin(l, r, Seq("grp"), Seq("g2"),
+      val salted = SaltedSweepJoin.auto(l, r, Seq("grp"), Seq("g2"),
         IntervalSpec.closed("ls", "le"), IntervalSpec.closed("rs", "re"),
-        slices = slices, hotKeyThreshold = 400)
-        .select("lid", "rid").as[(Long, Long)].collect().toSet
-      assert(salted == plain, s"slices=$slices")
+        targetRowsPerTask = 100, slicesCap = slices)
+      assert(salted.queryExecution.executedPlan.toString.contains("__ss_salt"), s"slices=$slices")
+      assert(salted.select("lid", "rid").as[(Long, Long)].collect().toSet == plain,
+        s"slices=$slices")
     }
     // keep=first survives slicing (a left row's matches all meet it in
     // its one slice)
@@ -306,9 +328,9 @@ class SweepJoinSpec extends SparkSuite {
       IntervalSpec.closed("ls", "le"), IntervalSpec.closed("rs", "re"),
       keep = "first", rightOrderCol = Some("rid"))
       .select("lid", "rid").as[(Long, Long)].collect().toSet
-    val keepSalted = SaltedSweepJoin(l, r, Seq("grp"), Seq("g2"),
+    val keepSalted = SaltedSweepJoin.auto(l, r, Seq("grp"), Seq("g2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.closed("rs", "re"),
-      slices = 8, hotKeyThreshold = 400,
+      targetRowsPerTask = 100, slicesCap = 8,
       keep = "first", rightOrderCol = Some("rid"))
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     assert(keepSalted == keepPlain)
@@ -323,11 +345,11 @@ class SweepJoinSpec extends SparkSuite {
       math.min(7, math.max(0, math.floor((s - mn) / w).toInt))).distinct
     assert(saltsUsed.size > 1, "hot key should split across slices")
     // no hot keys → the wrapper returns the plain sweep unchanged
-    val none = SaltedSweepJoin(l, r, Seq("grp"), Seq("g2"),
+    val none = SaltedSweepJoin.auto(l, r, Seq("grp"), Seq("g2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.closed("rs", "re"),
-      slices = 8, hotKeyThreshold = 100000)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(none == plain)
+      targetRowsPerTask = 100000, slicesCap = 8)
+    assert(!none.queryExecution.executedPlan.toString.contains("__ss_salt"))
+    assert(none.select("lid", "rid").as[(Long, Long)].collect().toSet == plain)
   }
 
   test("salted sweep: timestamp endpoints and zero-span hot key") {
@@ -340,11 +362,12 @@ class SweepJoinSpec extends SparkSuite {
     val plain = SweepJoin(l, r, Seq("grp"), Seq("g2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.point("p"))
       .select("lid", "rid").as[(Long, Long)].collect().toSet
-    val salted = SaltedSweepJoin(l, r, Seq("grp"), Seq("g2"),
+    // key 1: 300 left rows at 75 per task -> 4 slices
+    val salted = SaltedSweepJoin.auto(l, r, Seq("grp"), Seq("g2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.point("p"),
-      slices = 4, hotKeyThreshold = 100)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(salted == plain)
+      targetRowsPerTask = 75, slicesCap = 4)
+    assert(salted.queryExecution.executedPlan.toString.contains("__ss_salt"))
+    assert(salted.select("lid", "rid").as[(Long, Long)].collect().toSet == plain)
     // zero-span hot key (every left start identical) degenerates cleanly
     val l0 = (0 until 500).map(i => (7L, i.toLong, 100.0, 100.0 + i % 10))
       .toDF("grp", "lid", "ls", "le")
@@ -353,11 +376,11 @@ class SweepJoinSpec extends SparkSuite {
     val p0 = SweepJoin(l0, r0, Seq("grp"), Seq("g2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.point("p"))
       .select("lid", "rid").as[(Long, Long)].collect().toSet
-    val s0 = SaltedSweepJoin(l0, r0, Seq("grp"), Seq("g2"),
+    val s0 = SaltedSweepJoin.auto(l0, r0, Seq("grp"), Seq("g2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.point("p"),
-      slices = 4, hotKeyThreshold = 100)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(s0 == p0)
+      targetRowsPerTask = 100, slicesCap = 4)
+    assert(s0.queryExecution.executedPlan.toString.contains("__ss_salt"))
+    assert(s0.select("lid", "rid").as[(Long, Long)].collect().toSet == p0)
   }
 
   test("sweep: timestamp endpoints") {
@@ -390,9 +413,11 @@ class SweepJoinSpec extends SparkSuite {
     val plain = SweepJoin(l, r, Seq("grp"), Seq("g2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.point("p"))
       .select("lid", "rid").as[(Long, Long)].collect().toSet
-    val salted = SaltedSweepJoin(l, r, Seq("grp"), Seq("g2"),
+    // key 0 is hot on the left (601 rows vs 200 right), so the left's
+    // non-finite stats are the ones the slicing must refuse
+    val salted = SaltedSweepJoin.auto(l, r, Seq("grp"), Seq("g2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.point("p"),
-      slices = 4, hotKeyThreshold = 200)
+      targetRowsPerTask = 200, slicesCap = 4)
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     assert(salted == plain)
     assert(plain.exists(_._1 == 999L), "the -inf-start row itself matches")
@@ -415,11 +440,13 @@ class SweepJoinSpec extends SparkSuite {
     val plain = SweepJoin(l, r, Seq("grp"), Seq("g2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.closed("rs", "re"))
       .select("lid", "rid").as[(Long, Long)].collect().toSet
-    val salted = SaltedSweepJoin(l, r, Seq("grp"), Seq("g2"),
+    // key 0: 600 left rows at 150 per task -> 4 left slices (the right
+    // side's 105 rows stay under the threshold, so the left is sliced)
+    val salted = SaltedSweepJoin.auto(l, r, Seq("grp"), Seq("g2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.closed("rs", "re"),
-      slices = 4, hotKeyThreshold = 200)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(salted == plain)
+      targetRowsPerTask = 150, slicesCap = 4)
+    assert(salted.queryExecution.executedPlan.toString.contains("__ss_salt"))
+    assert(salted.select("lid", "rid").as[(Long, Long)].collect().toSet == plain)
     assert(plain.exists(_._2 == 900L) && plain.exists(_._2 == 901L) &&
       plain.exists(_._2 == 902L))
   }
@@ -435,16 +462,21 @@ class SweepJoinSpec extends SparkSuite {
     val plain = SweepJoin(l, r, Seq("a", "b"), Seq("a2", "b2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.point("p"))
       .select("lid", "rid").as[(Long, Long)].collect().toSet
-    val salted = SaltedSweepJoin(l, r, Seq("a", "b"), Seq("a2", "b2"),
+    val salted = SaltedSweepJoin.auto(l, r, Seq("a", "b"), Seq("a2", "b2"),
       IntervalSpec.closed("ls", "le"), IntervalSpec.point("p"),
-      slices = 4, hotKeyThreshold = 100)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(salted == plain)
+      targetRowsPerTask = 100, slicesCap = 4)
+    assert(salted.queryExecution.executedPlan.toString.contains("__ss_salt"))
+    assert(salted.select("lid", "rid").as[(Long, Long)].collect().toSet == plain)
     val ex = intercept[IllegalArgumentException] {
-      SaltedSweepJoin(l, r, Seq("a", "b"), Seq("a2", "b2"),
+      SaltedSweepJoin.auto(l, r, Seq("a", "b"), Seq("a2", "b2"),
         IntervalSpec.unboundedAbove("ls"), IntervalSpec.point("p"))
     }
     assert(ex.getMessage.contains("bounded intervals"), ex.getMessage)
+    // a cap under 2 slices is refused (0 would drop the hot key's rows)
+    intercept[IllegalArgumentException] {
+      SaltedSweepJoin.auto(l, r, Seq("a", "b"), Seq("a2", "b2"),
+        IntervalSpec.closed("ls", "le"), IntervalSpec.point("p"), slicesCap = 0)
+    }
   }
 
   test("auto salted sweep: detects skew with no knobs, picks the heavy side") {
@@ -573,26 +605,25 @@ class SweepJoinSpec extends SparkSuite {
       (g, 5000L + i, st, st + rnd.nextInt(15))
     }.toDF("grp", "rid", "rs", "re")
     spark.conf.set("spark.graft.skew.targetRowsPerTask", "300")
-    try {
+    // broadcasting off: both calls take IntervalJoin's sweep route
+    try withBroadcastThreshold("-1") {
       val guarded = IntervalJoin(l, r, IntervalSpec.closed("ls", "le"),
-        IntervalSpec.closed("rs", "re"), on = Seq("grp"),
-        sweep = Some(true), skewGuard = true)
+        IntervalSpec.closed("rs", "re"), on = Seq("grp"), skewGuard = true)
       assert(guarded.queryExecution.executedPlan.toString.contains("__ss_salt"),
         "hot key must be sliced under the guard")
       val plain = IntervalJoin(l, r, IntervalSpec.closed("ls", "le"),
-        IntervalSpec.closed("rs", "re"), on = Seq("grp"),
-        sweep = Some(true))
+        IntervalSpec.closed("rs", "re"), on = Seq("grp"))
+      assert(plain.queryExecution.executedPlan.toString.contains("IntervalSweepJoin"))
       def key(d: org.apache.spark.sql.DataFrame) =
         d.select("lid", "rid").as[(Long, Long)].collect().toSet
       assert(key(guarded) == key(plain))
       // keep=first through the guard: fused keep + left slicing
       val gKeep = IntervalJoin(l, r, IntervalSpec.closed("ls", "le"),
         IntervalSpec.closed("rs", "re"), on = Seq("grp"),
-        keep = "first", keepOrder = false, sweep = Some(true),
-        skewGuard = true)
+        keep = "first", keepOrder = false, skewGuard = true)
       val pKeep = IntervalJoin(l, r, IntervalSpec.closed("ls", "le"),
         IntervalSpec.closed("rs", "re"), on = Seq("grp"),
-        keep = "first", keepOrder = false, sweep = Some(true))
+        keep = "first", keepOrder = false)
       assert(key(gKeep) == key(pKeep))
     } finally spark.conf.unset("spark.graft.skew.targetRowsPerTask")
   }

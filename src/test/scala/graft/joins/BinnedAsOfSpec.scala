@@ -4,7 +4,8 @@ import graft.SparkSuite
 import graft.core.IntervalSpec
 import org.apache.spark.sql.functions._
 
-/** Specs for the binned keyless interval join and the as-of join. */
+/** Specs for the binned interval join (`IntervalJoin(binWidth = ...)`
+  * and its `Ops.binnedIntervalJoin` facade) and the as-of join. */
 class BinnedAsOfSpec extends SparkSuite {
   import spark.implicits._
 
@@ -17,7 +18,7 @@ class BinnedAsOfSpec extends SparkSuite {
     val l = mk(80, 5.0).toDF("lid", "ls", "le")
     val r = mk(60, 9.0).toDF("rid", "rs", "re")
 
-    val got = BinnedIntervalJoin(l, r, "ls", "le", "rs", "re", binWidth = 4.0)
+    val got = graft.Ops.binnedIntervalJoin(l, r, "ls", "le", "rs", "re", binWidth = 4.0)
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     val want = IntervalJoin(
       l, r,
@@ -38,8 +39,9 @@ class BinnedAsOfSpec extends SparkSuite {
     val l = mk(80, 5.0).toDF("lid", "g", "ls", "le")
     val r = mk(60, 9.0).toDF("rid", "g", "rs", "re")
 
-    val got = BinnedIntervalJoin(l, r, "ls", "le", "rs", "re",
-      binWidth = 4.0, on = Seq("g"))
+    val got = IntervalJoin(l, r, IntervalSpec.closed("ls", "le"),
+      IntervalSpec.closed("rs", "re"), on = Seq("g"), binWidth = Some(4.0),
+      suffixes = (None, Some("_r")), keepOrder = false)
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     val want = IntervalJoin(
       l, r,
@@ -106,7 +108,7 @@ class BinnedAsOfSpec extends SparkSuite {
     val l = Seq((1L, 0.0, 100.0)).toDF("lid", "ls", "le")
     val r = Seq((2L, 50.0, 60.0), (3L, -5.0, 0.0), (4L, 100.0, 110.0),
       (5L, 200.0, 201.0)).toDF("rid", "rs", "re")
-    val got = BinnedIntervalJoin(l, r, "ls", "le", "rs", "re", binWidth = 3.0)
+    val got = graft.Ops.binnedIntervalJoin(l, r, "ls", "le", "rs", "re", binWidth = 3.0)
       .select("lid", "rid").as[(Long, Long)].collect().toSeq.sorted
     assert(got == Seq((1L, 2L), (1L, 3L), (1L, 4L)))
   }
@@ -207,7 +209,7 @@ class BinnedAsOfSpec extends SparkSuite {
   }
 
   test("binned join with null equality keys matches keyed IntervalJoin (<=>)") {
-    // ADVICE r2 regression: BinnedIntervalJoin used ===, so null keys never
+    // regression: the binned join once used ===, so null keys never
     // matched; keyed IntervalJoin joins with <=> where they match each other.
     val l = Seq((1L, Integer.valueOf(1), 0.0, 5.0),
       (2L, null.asInstanceOf[Integer], 0.0, 5.0))
@@ -215,8 +217,9 @@ class BinnedAsOfSpec extends SparkSuite {
     val r = Seq((10L, Integer.valueOf(1), 1.0, 2.0),
       (11L, null.asInstanceOf[Integer], 1.0, 2.0))
       .toDF("rid", "g", "rs", "re")
-    val got = BinnedIntervalJoin(l, r, "ls", "le", "rs", "re",
-      binWidth = 2.0, on = Seq("g"))
+    val got = IntervalJoin(l, r, IntervalSpec.closed("ls", "le"),
+      IntervalSpec.closed("rs", "re"), on = Seq("g"), binWidth = Some(2.0),
+      suffixes = (None, Some("_r")), keepOrder = false)
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     val want = IntervalJoin(
       l, r,

@@ -133,7 +133,7 @@ class SweepJoinRewriteSpec extends SparkSuite {
   test("skewed declarative join routes through the deferred auto-salt " +
       "dispatch: rows = plain join = operator API") {
     import graft.core.IntervalSpec
-    // one mega-key (g=0 holds ~2/3 of both sides) — the SkewProbe shape
+    // one mega-key (g=0 holds ~2/3 of both sides) — the mega-entity shape
     val rnd = new scala.util.Random(17)
     val l = (0 until 3000).map { i =>
       val s = rnd.nextInt(5000).toLong

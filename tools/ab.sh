@@ -7,6 +7,7 @@ set -e
 Q="$1"; RUNS="${2:-3}"; CPUS="${3:-32}"; SF="${4:-/root/testdata/sf0.1}"
 JAR="${JAR:-/root/repo/target/scala-2.13/catabrapandasspark_2.13-0.1.0.jar}"
 WD=$(mktemp -d)
+trap 'rm -rf "$WD"' EXIT
 SPARK_GRAFT_MAX_LOAD="${MAXLOAD:-1.2}" SPARK_GRAFT_LOAD_WAIT="${LOADWAIT:-240}" \
 SPARK_GRAFT_ONLY="$Q" SPARK_GRAFT_RUNS="$RUNS" SPARK_GRAFT_PROBE_RUNS=0 \
 SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_SF_DIR="$SF" \
@@ -20,5 +21,4 @@ for k, v in sorted(d["queries"].items()):
     print(f"{k}: {v:.3f} s")
 print("load_avg:", d.get("load_avg"), "cpus-visible nproc:", d.get("nproc"))
 EOF
-grep -h "pass" "$WD/stderr.log" | grep "\[bench\]" | tail -20
-rm -rf "$WD"
+grep -h "pass" "$WD/stderr.log" | grep "\[bench\]" | tail -20 || true
